@@ -357,9 +357,14 @@ object Main {
         println(s"migrated ${result.tablesCreated.size} tables, " +
           s"${result.rowsLoaded.values.sum} rows, " +
           s"${result.statementsExecuted} statements")
-        if (result.validationMismatches.nonEmpty)
+        // a count OR content mismatch fails the run
+        val mismatched = (result.validationMismatches.keys ++
+          result.checksumMismatches.keys).toSeq.distinct.sorted
+        if (mismatched.nonEmpty)
           throw new MigrationValidationException(
-            s"VALIDATION MISMATCHES: ${result.validationMismatches}")
+            s"VALIDATION MISMATCHES in ${mismatched.mkString(", ")}: " +
+              s"row counts ${result.validationMismatches}, " +
+              s"checksums ${result.checksumMismatches}")
       } finally loader match {
         case c: AutoCloseable => c.close()
         case _ => ()
@@ -456,10 +461,9 @@ final class SparkTableLoader(
   private lazy val scanCaps: graft.sources.ScanCaps =
     if (dialect.name == "mysql" && cfg.typeOptions.usePostGis &&
         sourceTables.exists(st =>
-          dialect.needsScanRewrite(st.columns, cfg.typeOptions))) {
-      val c = java.sql.DriverManager.getConnection(srcUrl)
-      try graft.sources.ScanCaps.probe(c) finally c.close()
-    } else graft.sources.ScanCaps()
+          dialect.needsScanRewrite(st.columns, cfg.typeOptions)))
+      JdbcSource.withConnection(srcUrl)(graft.sources.ScanCaps.probe)
+    else graft.sources.ScanCaps()
 
   private def chunkKey(st: SourceTable): Option[String] =
     st.indexes.find(_.isPrimary).map(_.columns).collect {
@@ -471,23 +475,20 @@ final class SparkTableLoader(
         !c.columnType.toLowerCase.contains("unsigned") => c.name
     }
 
-  private def scalarLong(sql: String): Option[(Long, Long)] = {
-    val df = spark.read.format("jdbc").option("url", srcUrl)
-      .option("query", sql).load().collect()
-    df.headOption.flatMap { r =>
-      if (r.isNullAt(0) || r.isNullAt(1)) None
-      // MIN/MAX over an INT/SMALLINT key comes back as the narrower
-      // boxed type — go through Number, not getLong
-      else Some((r.get(0).asInstanceOf[Number].longValue(),
-        r.get(1).asInstanceOf[Number].longValue()))
-    }
-  }
-
   def load(table: TableMeta): Long = {
     val st = bySource(table.name)
     val key = chunkKey(st)
-    val bounds = key.flatMap(k =>
-      scalarLong(JdbcSource.planningSql(dialect, st.name, k)))
+    val bounds = key.flatMap(k => JdbcSource.withConnection(srcUrl)(
+      JdbcSource.queryRow(_, JdbcSource.planningSql(dialect, st.name, k)) {
+        rs =>
+          // MIN/MAX over an INT/SMALLINT key comes back as the narrower
+          // boxed type — go through Number, not getLong; NULL = empty
+          (rs.getObject(1), rs.getObject(2)) match {
+            case (lo: Number, hi: Number) =>
+              Some((lo.longValue(), hi.longValue()))
+            case _ => None
+          }
+      }))
     // single_tx never reaches this loader (Main routes it to
     // SingleTxTableLoader, the true one-connection snapshot path)
     val workers = cfg.workers
@@ -546,8 +547,8 @@ final class SparkTableLoader(
     // order the DataFrame delivers
     val targetCols = df.columns.toSeq.map(c =>
       SchemaMapping.pgName(c, cfg.snakeCaseIdentifiers))
-    val sql = CopySink.insertSql(cfg.targetSchema, table.name, targetCols)
-    val copySql = PgCopy.copySql(cfg.targetSchema, table.name, targetCols)
+    val writer = CopySink.chooseWriter(targetUrl, cfg.targetSchema,
+      table.name, targetCols, 1000)
     // single source pass: each partition writes its rows and yields its
     // count (reference migrate.go:448-473 running counter). runJob's
     // result handler fires on the driver PER COMPLETED PARTITION, so
@@ -564,9 +565,8 @@ final class SparkTableLoader(
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     val writeChunk = (it: Iterator[org.apache.spark.sql.Row]) => {
       val res: Either[String, Long] =
-        try Right(CopySink.writePartitionAuto(targetUrl, it,
-          () => java.sql.DriverManager.getConnection(targetUrl),
-          sql, copySql, 1000))
+        try Right(CopySink.writePartition(it,
+          () => java.sql.DriverManager.getConnection(targetUrl), writer))
         catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
       res
     }
@@ -596,22 +596,13 @@ final class SparkTableLoader(
     newRows
   }
 
-  private def count(url: String, qualified: String): Long =
-    spark.read.format("jdbc").option("url", url)
-      .option("query", s"SELECT COUNT(*) AS n FROM $qualified")
-      .load().collect().head.get(0).asInstanceOf[Number].longValue()
-
   def sourceCount(table: TableMeta): Long =
-    count(srcUrl, dialect.quote(bySource(table.name).name))
+    JdbcSource.withConnection(srcUrl)(JdbcSource.count(_,
+      dialect.quote(bySource(table.name).name)))
 
   def targetCount(table: TableMeta): Long =
-    count(cfg.targetUrl, qualifiedTarget(table.name))
-
-  private def qualifiedTarget(name: String): String = {
-    val t = SchemaMapping.pgIdent(name)
-    if (cfg.targetSchema == null || cfg.targetSchema.isEmpty) t
-    else SchemaMapping.pgIdent(cfg.targetSchema) + "." + t
-  }
+    JdbcSource.withConnection(cfg.targetUrl)(JdbcSource.count(_,
+      SchemaMapping.qualified(cfg.targetSchema, table.name)))
 
   /** Order-insensitive content digest: every row canonicalizes to a
     * \u0001-joined string of its column values (NULL → a sentinel no
@@ -635,8 +626,7 @@ final class SparkTableLoader(
       cols.map(c => coalesce(col(c).cast("string"), lit("\u0000NULL"))): _*)
     val h = conv(substring(md5(canon.cast("binary")), 1, 15), 16, 10)
       .cast(DecimalType(38, 0))
-    val r = df.agg(
-      org.apache.spark.sql.functions.count(lit(1)).as("n"),
+    val r = df.agg(count(lit(1)).as("n"),
       sum(h).as("d")).collect().head
     val d = Option(r.getDecimal(1)).map(_.toBigInteger)
       .getOrElse(java.math.BigInteger.ZERO)
@@ -658,7 +648,8 @@ final class SparkTableLoader(
     val cols = st.columns.map(c =>
       SchemaMapping.pgName(c.name, cfg.snakeCaseIdentifiers))
     val df = spark.read.format("jdbc").option("url", cfg.targetUrl)
-      .option("dbtable", qualifiedTarget(table.name)).load()
+      .option("dbtable", SchemaMapping.qualified(cfg.targetSchema,
+        table.name)).load()
     Some(digest(df, cols))
   }
 }

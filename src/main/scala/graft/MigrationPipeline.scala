@@ -22,7 +22,8 @@ trait SqlExecutor {
 /** Per-table load callback: given the table, stream its data to the
   * target and return rows written. In production this is a Spark job —
   * chunked JDBC read (ChunkPlanner predicates) → transform projection →
-  * CopySink.write; the pipeline only cares about orchestration order.
+  * CopySink.writePartition per chunk; the pipeline only cares about
+  * orchestration order.
   */
 trait TableLoader {
   def load(table: TableMeta): Long
@@ -187,49 +188,30 @@ final class MigrationPipeline(
       }
 
     // 3. validation (reference validate.go:42-135; skipped in
-    // schema_only — there is no data to compare, main.go:328-339).
-    // Counts run in parallel bounded by `workers`, like the reference's
-    // validation pool.
+    // schema_only — there is no data to compare, main.go:328-339), one
+    // pass over the tables bounded by `workers`, like the reference's
+    // validation pool. `checksum` adds content digests to the count
+    // compare; a table whose loader can't digest (None) is checked by
+    // its counts alone.
     val validating =
       Set("row_count", "checksum")(cfg.validation) && !cfg.schemaOnly
-    val mismatches =
-      if (validating) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(cfg.workers, tables.size)))
-        try tables.map { t =>
-          t.name -> pool.submit(
-            new java.util.concurrent.Callable[(Long, Long)] {
-              def call(): (Long, Long) =
-                (loader.sourceCount(t), loader.targetCount(t))
-            })
-        }.flatMap { case (name, f) =>
-          val (src, tgt) = f.get()
-          if (src != tgt) Some(name -> (src, tgt)) else None
-        }.toMap
-        finally pool.shutdown()
-      } else Map.empty[String, (Long, Long)]
-    // checksum validation — content equality on top of the reference's
-    // count compare; a table whose loader can't digest (None) already
-    // had its counts checked above
-    val checksumMismatches =
-      if (cfg.validation == "checksum" && !cfg.schemaOnly) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(cfg.workers, tables.size)))
-        try tables.map { t =>
-          t.name -> pool.submit(new java.util.concurrent.Callable[
-            (Option[String], Option[String])] {
-            def call(): (Option[String], Option[String]) =
-              (loader.sourceDigest(t), loader.targetDigest(t))
-          })
-        }.flatMap { case (name, f) =>
-          f.get() match {
-            case (Some(src), Some(tgt)) if src != tgt =>
-              Some(name -> (src, tgt))
-            case _ => None
-          }
-        }.toMap
-        finally pool.shutdown()
-      } else Map.empty[String, (String, String)]
+    val verdicts =
+      if (!validating) Nil
+      else Parallel.inParallel(tables, cfg.workers) { t =>
+        val counts = (loader.sourceCount(t), loader.targetCount(t))
+        val digests =
+          if (cfg.validation == "checksum")
+            (loader.sourceDigest(t), loader.targetDigest(t))
+          else (None, None)
+        (t.name, counts, digests)
+      }
+    val mismatches = verdicts.collect {
+      case (name, counts @ (src, tgt), _) if src != tgt => name -> counts
+    }.toMap
+    val checksumMismatches = verdicts.collect {
+      case (name, _, (Some(src), Some(tgt))) if src != tgt =>
+        name -> (src, tgt)
+    }.toMap
 
     // 4. post phase (reference post.go:17-100 order). data_only skips
     // all DDL (constraints already exist on the pre-created schema) —

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.sql.{Connection, DriverManager, ResultSet}
 
 /** Chunk-parallel JDBC reads — the reference's parallel scan tier
   * (`migrate.go:44-147`) on Spark's JDBC source.
@@ -33,10 +34,37 @@ object JdbcSource {
         */
       scanQuery: Option[String] = None)
 
-  /** The MIN/MAX planning SQL (runs as a 1-row JDBC query). */
+  /** The MIN/MAX planning SQL (runs through [[queryRow]]). */
   def planningSql(dialect: SourceDialect, table: String, key: String): String =
     s"SELECT MIN(${dialect.quote(key)}) AS lo, " +
       s"MAX(${dialect.quote(key)}) AS hi FROM ${dialect.quote(table)}"
+
+  /** Run a one-row query (MIN/MAX planning, COUNT(*)) on the caller's
+    * connection and read that row — one round trip, no Spark job. The
+    * caller owns the connection, so `single_tx` counts stay inside its
+    * snapshot transaction.
+    */
+  def queryRow[A](conn: Connection, sql: String)(read: ResultSet => A): A = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(sql)
+      try {
+        if (!rs.next())
+          throw new IllegalStateException(s"no row returned by: $sql")
+        read(rs)
+      } finally rs.close()
+    } finally st.close()
+  }
+
+  /** Row count of an already-quoted relation. */
+  def count(conn: Connection, relation: String): Long =
+    queryRow(conn, s"SELECT COUNT(*) FROM $relation")(_.getLong(1))
+
+  /** Open `url` for the duration of `f`. */
+  def withConnection[A](url: String)(f: Connection => A): A = {
+    val c = DriverManager.getConnection(url)
+    try f(c) finally c.close()
+  }
 
   /** Build the per-partition predicate array from planned bounds.
     * Empty table (no bounds) → single unpartitioned read.

@@ -49,35 +49,15 @@ object LakehouseSink {
     */
   private[graft] val MaintenancePoolSize = 8
 
-  /** Run `f` over `xs` on a bounded driver pool, results in input
-    * order; the first failure rethrows its ORIGINAL exception (the
-    * loud-failure maintenance contract — an ExecutionException
-    * wrapper would change the surface the specs and callers pin).
+  /** [[graft.Parallel.inParallel]] on the [[MaintenancePoolSize]] pool.
     * Units MUST be independent: callers parallelize across
     * directories (or across files within one swap phase), never
     * within a directory — same-dir rewrites consult sibling files
     * mid-pass and sweep `.graft-*` staging, so same-dir concurrency
     * would race a live sibling's staging dir.
     */
-  private[graft] def inParallel[A, B](xs: Seq[A],
-      par: Int = MaintenancePoolSize)(f: A => B): Seq[B] =
-    if (xs.lengthCompare(1) <= 0 || par <= 1) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(par, xs.size))
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] {
-            def call(): B = f(x)
-          })
-        }
-        try futs.map(_.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      } finally { pool.shutdownNow(); () }
-    }
+  private[graft] def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    graft.Parallel.inParallel(xs, MaintenancePoolSize)(f)
 
   /** Hadoop returns `false` on a failed rename/delete instead of
     * throwing; a maintenance swap must surface a half-applied state

@@ -14,7 +14,7 @@ import java.sql.Connection
   * against no PostgreSQL driver (none exists in the sandbox), but the
   * encoding — the part correctness lives in — is pure and fully
   * unit-tested. At runtime, a postgresql JDBC URL dispatches here
-  * ([[CopySink.writePartitionAuto]]); everything else keeps the
+  * ([[CopySink.chooseWriter]]); everything else keeps the
   * driver-agnostic batched INSERT.
   *
   * COPY TEXT format (PostgreSQL "COPY ... FROM STDIN" defaults): one
@@ -32,11 +32,8 @@ object PgCopy {
     * pgx CopyFrom speaks.
     */
   def copySql(schema: String, table: String, cols: Seq[String]): String = {
-    import SchemaMapping.pgIdent
-    val target =
-      if (schema == null || schema.isEmpty) pgIdent(table)
-      else s"${pgIdent(schema)}.${pgIdent(table)}"
-    s"COPY $target (${cols.map(pgIdent).mkString(", ")}) FROM STDIN"
+    s"COPY ${SchemaMapping.qualified(schema, table)} " +
+      s"(${cols.map(SchemaMapping.pgIdent).mkString(", ")}) FROM STDIN"
   }
 
   /** Escape one scalar's text per COPY TEXT rules. */
@@ -136,22 +133,10 @@ object PgCopy {
   }
 
   /** Stream one partition through pgjdbc's CopyManager (resolved
-    * reflectively — see class doc). Returns rows written.
-    */
-  def copyPartition(
-      rows: Iterator[Row],
-      connect: () => Connection,
-      sql: String): Long = {
-    val conn = connect()
-    try copyOnConnection(conn, rows, sql)
-    finally conn.close()
-  }
-
-  /** The COPY stream on an ALREADY-OPEN connection — for callers that
-    * own the transaction (the exactly-once ledger wraps this call and
-    * its ledger INSERT in one commit). Does not commit, roll back, or
-    * close; with autocommit off, the copied rows are invisible until
-    * the caller commits.
+    * reflectively — see object doc) on the caller's open connection.
+    * Does not commit, roll back, or close: the caller owns the
+    * transaction ([[CopySink.writePartition]]), so the copied rows stay
+    * invisible until it commits. Returns rows written.
     */
   def copyOnConnection(
       conn: Connection,

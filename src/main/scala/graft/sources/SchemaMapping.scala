@@ -118,6 +118,13 @@ object SchemaMapping {
   /** F15 — PG identifier quoting (`schema.go:37-39`). */
   def pgIdent(s: String): String = "\"" + s.replace("\"", "\"\"") + "\""
 
+  /** Target table reference: `"schema"."table"`, or the bare quoted
+    * table when `schema` is null/empty (embedded targets like Derby).
+    */
+  def qualified(schema: String, table: String): String =
+    if (schema == null || schema.isEmpty) pgIdent(table)
+    else s"${pgIdent(schema)}.${pgIdent(table)}"
+
   /** Target-side identifier: snake_case (default) or lowercased
     * (reference `schema.go` / `source_mysql.go:30-35`).
     */

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.{SourceTable, TableLoader}
 import graft.config.JobConfig
-import java.sql.{Connection, DriverManager, ResultSet}
+import java.sql.{Connection, DriverManager}
 
 /** Sequential one-connection read path for `mode = "single_tx"` — true
   * snapshot semantics matching the reference (`migrate.go:149-259`):
@@ -13,8 +13,8 @@ import java.sql.{Connection, DriverManager, ResultSet}
   * consistent cross-table state. The parallel Spark path cannot express
   * this (each task owns its own connection at a different point in
   * time); this loader trades read parallelism for isolation, exactly
-  * the reference's trade. The TARGET side still batches through
-  * [[CopySink]] unchanged.
+  * the reference's trade. The TARGET side writes through the same
+  * [[CopySink.writePartition]] as the parallel path.
   *
   * Lifecycle: the connection opens lazily on the first table, stays
   * open across all `load`/`sourceCount` calls (counts are
@@ -91,10 +91,8 @@ final class SingleTxTableLoader(
         val n = rs.getMetaData.getColumnCount
         val targetCols = st.columns.map(c =>
           SchemaMapping.pgName(c.name, cfg.snakeCaseIdentifiers))
-        val insertSql =
-          CopySink.insertSql(cfg.targetSchema, table.name, targetCols)
-        val copySql =
-          PgCopy.copySql(cfg.targetSchema, table.name, targetCols)
+        val writer = CopySink.chooseWriter(cfg.targetUrl, cfg.targetSchema,
+          table.name, targetCols, 1000)
         val rows = new Iterator[org.apache.spark.sql.Row] {
           private var advanced = false
           private var has = false
@@ -109,34 +107,19 @@ final class SingleTxTableLoader(
               (1 to n).map(i => colTransforms(i - 1)(rs.getObject(i))))
           }
         }
-        CopySink.writePartitionAuto(cfg.targetUrl, rows,
-          () => DriverManager.getConnection(cfg.targetUrl),
-          insertSql, copySql, 1000)
+        CopySink.writePartition(rows,
+          () => DriverManager.getConnection(cfg.targetUrl), writer)
       } finally rs.close()
-    } finally stmt.close()
-  }
-
-  private def scalarCount(c: Connection, sql: String): Long = {
-    val stmt = c.createStatement()
-    try {
-      val rs = stmt.executeQuery(sql)
-      try { rs.next(); rs.getLong(1) } finally rs.close()
     } finally stmt.close()
   }
 
   /** Snapshot-consistent: runs in the SAME transaction as the copy. */
   def sourceCount(table: TableMeta): Long =
-    scalarCount(conn, "SELECT COUNT(*) FROM " +
-      dialect.quote(bySource(table.name).name))
+    JdbcSource.count(conn, dialect.quote(bySource(table.name).name))
 
-  def targetCount(table: TableMeta): Long = {
-    val qualified = Option(cfg.targetSchema)
-      .map(s => SchemaMapping.pgIdent(s) + ".").getOrElse("") +
-      SchemaMapping.pgIdent(table.name)
-    val c = DriverManager.getConnection(cfg.targetUrl)
-    try scalarCount(c, s"SELECT COUNT(*) FROM $qualified")
-    finally c.close()
-  }
+  def targetCount(table: TableMeta): Long =
+    JdbcSource.withConnection(cfg.targetUrl)(JdbcSource.count(_,
+      SchemaMapping.qualified(cfg.targetSchema, table.name)))
 
   def close(): Unit = synchronized {
     if (opened != null) {

@@ -38,10 +38,14 @@ class JdbcIntegrationSpec extends AnyFunSuite {
       .withColumn("score", col("id") * 1.5)
       .repartition(4)
 
-    CopySink.write(df, schema = null, table = "events_rt",
-      connect = () => DriverManager.getConnection(
-        "jdbc:derby:memory:graftdb"),
-      batchSize = 100)
+    val writer = CopySink.chooseWriter(url, null, "events_rt",
+      df.columns.toSeq, 100)
+    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+      CopySink.writePartition(rows,
+        () => DriverManager.getConnection("jdbc:derby:memory:graftdb"),
+        writer)
+      ()
+    }
 
     // partitioned read back via chunk predicates
     val preds = JdbcSource.partitionPredicates(DerbyDialect, "id",
@@ -102,9 +106,22 @@ class JdbcIntegrationSpec extends AnyFunSuite {
     val meta = SchemaMapping.toTableMeta(GenericJdbcDialect, items, Nil,
       TypeOptions())
     assert(meta.name == "items")
-    val written = loader.load(meta)
-    assert(written == 500L)
-    assert(loader.sourceCount(meta) == 500L)
+    val clock = new StageClock
+    spark.sparkContext.addSparkListener(clock)
+    try {
+      clock.quiesce(); clock.reset()
+      val written = loader.load(meta)
+      clock.quiesce()
+      assert(written == 500L)
+      // the chunk write is the load's only Spark job: the MIN/MAX
+      // planning query runs over plain JDBC
+      assert(clock.jobs == 1, s"load launched ${clock.jobs} Spark jobs")
+      clock.reset()
+      assert(loader.sourceCount(meta) == 500L)
+      assert(loader.targetCount(meta) == 500L)
+      clock.quiesce()
+      assert(clock.jobs == 0, s"counts launched ${clock.jobs} Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(clock)
     // target got every row under the mapped column names
     val check = DriverManager.getConnection(tgtUrl)
     try {
@@ -303,6 +320,31 @@ class JdbcIntegrationSpec extends AnyFunSuite {
     // successful migration deletes the resume checkpoint
     assert(!java.nio.file.Files.exists(
       Main.checkpointPath(cfgPath)))
+
+    // checksum validation: an after_data hook rewrites one value, so
+    // the row counts still match but the content does not — the run
+    // must fail and name the table
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-cli-ck")
+    java.nio.file.Files.writeString(ckDir.resolve("tamper.sql"),
+      "UPDATE \"tgt\".\"prods\" SET \"pname\" = 'tampered' " +
+        "WHERE \"sku\" = 'sku_007'")
+    val ckPath = ckDir.resolve("migration.toml")
+    java.nio.file.Files.writeString(ckPath,
+      s"""mode = "parallel"
+         |unlogged_tables = false
+         |validation = "checksum"
+         |[source]
+         |dialect = "jdbc"
+         |url = "$srcUrl"
+         |[target]
+         |url = "jdbc:derby:memory:graftclitgtck;create=true"
+         |schema = "tgt"
+         |[hooks]
+         |after_data = ["tamper.sql"]
+         |""".stripMargin)
+    val err = intercept[Main.MigrationValidationException](
+      Main.runMigrateWith(ckPath, spark))
+    assert(err.getMessage.contains("in prods:"), err.getMessage)
   }
 
   test("single_tx on Derby: ALL tables read over ONE connection in one " +

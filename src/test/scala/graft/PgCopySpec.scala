@@ -129,11 +129,13 @@ class PgCopySpec extends AnyFunSuite {
     try c.createStatement().execute(
       "CREATE TABLE \"cd\" (\"id\" INT, \"v\" VARCHAR(10))")
     finally c.close()
-    val written = CopySink.writePartitionAuto(url,
+    val writer = CopySink.chooseWriter(url, null, "cd", Seq("id", "v"), 10)
+    assert(writer ==
+      CopySink.InsertDataWriter(CopySink.insertSql(null, "cd",
+        Seq("id", "v")), 10))
+    val written = CopySink.writePartition(
       Iterator(Row(1, "a"), Row(2, "b")),
-      () => java.sql.DriverManager.getConnection(url),
-      CopySink.insertSql(null, "cd", Seq("id", "v")),
-      PgCopy.copySql(null, "cd", Seq("id", "v")), 10)
+      () => java.sql.DriverManager.getConnection(url), writer)
     assert(written == 2L)
     val chk = java.sql.DriverManager.getConnection(url)
     try {
@@ -141,5 +143,25 @@ class PgCopySpec extends AnyFunSuite {
         .executeQuery("SELECT COUNT(*) FROM \"cd\"")
       rs.next(); assert(rs.getInt(1) == 2)
     } finally chk.close()
+  }
+
+  test("writePartition: a failed rollback is attached to the writer's " +
+      "error as suppressed, never swallowed") {
+    val calls = scala.collection.mutable.ArrayBuffer[String]()
+    val rollbackFailure = new java.sql.SQLException("rollback failed")
+    val conn = java.lang.reflect.Proxy.newProxyInstance(
+      getClass.getClassLoader, Array(classOf[java.sql.Connection]),
+      (_: AnyRef, m: java.lang.reflect.Method, _: Array[AnyRef]) => {
+        calls += m.getName
+        if (m.getName == "rollback") throw rollbackFailure
+        null
+      }).asInstanceOf[java.sql.Connection]
+    val failing: CopySink.PartitionDataWriter =
+      (_, _) => throw new IllegalStateException("write failed")
+    val err = intercept[IllegalStateException](
+      CopySink.writePartition(Iterator(Row(1)), () => conn, failing))
+    assert(err.getMessage == "write failed")
+    assert(err.getSuppressed.toSeq == Seq(rollbackFailure))
+    assert(calls == Seq("setAutoCommit", "rollback", "close"))
   }
 }

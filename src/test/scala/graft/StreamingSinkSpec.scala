@@ -28,10 +28,14 @@ class StreamingSinkSpec extends AnyFunSuite {
     val q = events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        CopySink.write(batch, schema = null, table = "events_sink",
-          connect = () => DriverManager.getConnection(
-            "jdbc:derby:memory:graftstream"),
-          batchSize = 200)
+        val writer = CopySink.chooseWriter(url, null, "events_sink",
+          batch.columns.toSeq, 200)
+        batch.foreachPartition {
+          (rows: Iterator[org.apache.spark.sql.Row]) =>
+            CopySink.writePartition(rows, () => DriverManager.getConnection(
+              "jdbc:derby:memory:graftstream"), writer)
+            ()
+        }
       }
       .start()
     try q.processAllAvailable() finally q.stop()
