@@ -567,11 +567,19 @@ final class SparkTableLoader(
       val res: Either[String, Long] =
         try Right(CopySink.writePartition(it,
           () => java.sql.DriverManager.getConnection(targetUrl), writer))
-        catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
+        catch { case e: Exception => Left(e.toString) }
       res
     }
+    // Dataset.rdd's rows without its SQL-execution wrapper (start/end
+    // events and a formatted explain string on every load)
+    val rowEnc = org.apache.spark.sql.catalyst.encoders
+      .ExpressionEncoder(df.schema).resolveAndBind()
+    val rows = df.queryExecution.toRdd.mapPartitions { it =>
+      val toRow = rowEnc.createDeserializer()
+      it.map(toRow)
+    }
     spark.sparkContext.runJob(
-      df.rdd,
+      rows,
       writeChunk,
       (idx: Int, res: Either[String, Long]) => res match {
         case Right(n) =>
@@ -606,11 +614,14 @@ final class SparkTableLoader(
 
   /** Order-insensitive content digest: every row canonicalizes to a
     * \u0001-joined string of its column values (NULL → a sentinel no
-    * real cast produces), md5's leading 15 hex chars (60 bits) become
-    * an integer, and the digest is COUNT plus the exact DECIMAL(38,0)
-    * sum of those integers — commutative, so chunk order, partitioning
-    * and engine scan order are all irrelevant, and both sides reduce
-    * to one number without any sort or row transfer to the driver.
+    * real cast produces), and md5's leading 15 hex chars (60 bits)
+    * become an integer. The digest is `"<count>:<exact sum of those
+    * integers>"` — commutative, so chunk order, partitioning and engine
+    * scan order are all irrelevant. Each partition folds its own rows
+    * to a partial count and sum ([[SparkTableLoader.foldDigest]]) and
+    * the driver adds the partials exactly
+    * ([[SparkTableLoader.combineDigest]]): one job, no exchange, no row
+    * transfer to the driver.
     * Both digests canonicalize through SPARK casts on the SAME column
     * order (source order / its mapped target names), so engine-side
     * formatting differences never enter the comparison; columns whose
@@ -621,16 +632,14 @@ final class SparkTableLoader(
   private def digest(df: org.apache.spark.sql.DataFrame,
       cols: Seq[String]): String = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
     val canon = concat_ws("\u0001",
       cols.map(c => coalesce(col(c).cast("string"), lit("\u0000NULL"))): _*)
-    val h = conv(substring(md5(canon.cast("binary")), 1, 15), 16, 10)
-      .cast(DecimalType(38, 0))
-    val r = df.agg(count(lit(1)).as("n"),
-      sum(h).as("d")).collect().head
-    val d = Option(r.getDecimal(1)).map(_.toBigInteger)
-      .getOrElse(java.math.BigInteger.ZERO)
-    s"${r.getLong(0)}:$d"
+    val prefix = conv(substring(md5(canon.cast("binary")), 1, 15), 16, 10)
+      .cast("long")
+    SparkTableLoader.combineDigest(df.select(prefix).queryExecution.toRdd
+      .mapPartitions(rows =>
+        Iterator.single(SparkTableLoader.foldDigest(rows.map(_.getLong(0)))))
+      .collect())
   }
 
   override def sourceDigest(table: TableMeta): Option[String] = {
@@ -651,5 +660,40 @@ final class SparkTableLoader(
       .option("dbtable", SchemaMapping.qualified(cfg.targetSchema,
         table.name)).load()
     Some(digest(df, cols))
+  }
+}
+
+object SparkTableLoader {
+
+  /** One partition's share of a checksum digest: its row count and the
+    * sum of its rows' 60-bit md5 prefixes, kept as the sums of the high
+    * and the low 30 bits: each row adds under 2^30 to each, so a sum
+    * reaches `Long` range only after some 2^33 rows in one partition,
+    * and `Math.addExact` then throws instead of wrapping.
+    */
+  final case class DigestPart(rows: Long, hi: Long, lo: Long)
+
+  private val Low30 = (1L << 30) - 1
+
+  /** Fold one partition's 60-bit prefixes (each in `[0, 2^60)`). */
+  def foldDigest(prefixes: Iterator[Long]): DigestPart = {
+    var rows, hi, lo = 0L
+    prefixes.foreach { p =>
+      rows += 1
+      hi = Math.addExact(hi, p >>> 30)
+      lo = Math.addExact(lo, p & Low30)
+    }
+    DigestPart(rows, hi, lo)
+  }
+
+  /** Add the partitions' parts exactly: `"<count>:<sum>"`, `"0:0"` when
+    * there are no rows.
+    */
+  def combineDigest(parts: Iterable[DigestPart]): String = {
+    val sum = parts.foldLeft(java.math.BigInteger.ZERO) { (s, p) =>
+      s.add(java.math.BigInteger.valueOf(p.hi).shiftLeft(30))
+        .add(java.math.BigInteger.valueOf(p.lo))
+    }
+    s"${parts.map(_.rows).sum}:$sum"
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.config.JobConfig
 import graft.sources._
+import scala.util.control.NonFatal
 
 /** Target-side statement executor boundary. Production wires a JDBC
   * connection to PostgreSQL; tests record. The pipeline only speaks SQL
@@ -77,6 +78,14 @@ final class MigrationPipeline(
   private var stmtCount = 0
   private def run(sql: String): Unit = { stmtCount += 1; exec.execute(sql) }
 
+  // flush the checkpoint's partial progress before `failure` propagates;
+  // a flush that fails as well is attached to it, never thrown in its place
+  private def flushOnFailure(failure: Throwable): Unit =
+    checkpoint.foreach { cp =>
+      try cp.flush()
+      catch { case NonFatal(f) => failure.addSuppressed(f) }
+    }
+
   private def runHooks(phase: String): Unit =
     hookSql.get(phase).toSeq.flatMap(Hooks.splitStatements)
       .filter(Hooks.isExecutable)
@@ -118,7 +127,7 @@ final class MigrationPipeline(
         enumSets.foreach(vs => run(DdlGenerator.dropEnumType(schema, vs)))
       }
       enumSets.foreach(vs => run(DdlGenerator.createEnumType(schema, vs)))
-      // flush in a finally: if a CREATE fails mid-loop, the tables
+      // flush on failure too: if a CREATE fails mid-loop, the tables
       // already created must reach the checkpoint file or the next
       // resume re-issues their CREATE and dies on duplicate tables
       try tables.foreach { t =>
@@ -126,7 +135,8 @@ final class MigrationPipeline(
           run(DdlGenerator.createTable(schema, t, unlogged = unlogged))
           checkpoint.foreach(_.ensureTable(t.name))
         }
-      } finally checkpoint.foreach(_.flush())
+      } catch { case e: Throwable => flushOnFailure(e); throw e }
+      checkpoint.foreach(_.flush())
     }
 
     // 2. data phase (hooks bracket the load, reference main.go:288-326).
@@ -161,11 +171,7 @@ final class MigrationPipeline(
               t.name -> cp.map(_.rowsCopied(t.name)).getOrElse(n)
           }
         }.toMap
-        catch {
-          case e: Throwable =>
-            checkpoint.foreach(_.flush())
-            throw e
-        }
+        catch { case e: Throwable => flushOnFailure(e); throw e }
       runHooks("after_data")
       checkpoint.foreach(_.cleanup())
       loaded

@@ -184,6 +184,96 @@ class JdbcIntegrationSpec extends AnyFunSuite {
       "digest failed to catch a same-count corruption")
   }
 
+  test("checksum digests on Derby: the partition fold returns the " +
+      "DECIMAL(38,0) aggregate's strings in one shuffle-free job each") {
+    import graft.config.JobConfig
+    import graft.sources.{GenericJdbcDialect, Introspection,
+      SchemaMapping, TypeOptions}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.DecimalType
+    val srcUrl = "jdbc:derby:memory:graftpins;create=true"
+    val tgtUrl = "jdbc:derby:memory:graftpint;create=true"
+    val sc = DriverManager.getConnection(srcUrl)
+    try {
+      val st = sc.createStatement()
+      st.execute("CREATE TABLE PIN (ID INT NOT NULL PRIMARY KEY, " +
+        "NAME VARCHAR(40), PRICE DOUBLE, TS TIMESTAMP)")
+      st.execute("CREATE TABLE BLANK (ID INT NOT NULL PRIMARY KEY, " +
+        "NAME VARCHAR(20))")
+      val ins = sc.prepareStatement("INSERT INTO PIN VALUES (?, ?, ?, ?)")
+      (1 to 240).foreach { i =>
+        ins.setInt(1, i)
+        if (i % 7 == 0) ins.setNull(2, java.sql.Types.VARCHAR)
+        else ins.setString(2, s"n_$i")
+        if (i % 11 == 0) ins.setNull(3, java.sql.Types.DOUBLE)
+        else ins.setDouble(3, i / 3.0)
+        if (i % 13 == 0) ins.setNull(4, java.sql.Types.TIMESTAMP)
+        else ins.setTimestamp(4, java.sql.Timestamp.valueOf(
+          java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(i * 97L)))
+        ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally sc.close()
+    val tc = DriverManager.getConnection(tgtUrl)
+    try {
+      val st = tc.createStatement()
+      st.execute("CREATE TABLE \"pin\" (\"id\" INT, \"name\" " +
+        "VARCHAR(40), \"price\" DOUBLE, \"ts\" TIMESTAMP)")
+      st.execute("CREATE TABLE \"blank\" (\"id\" INT, \"name\" " +
+        "VARCHAR(20))")
+    } finally tc.close()
+    val conn = DriverManager.getConnection(srcUrl)
+    val (sts, _) = try Introspection.fromJdbcMetadata(conn, "APP")
+      finally conn.close()
+    val tables = Seq("PIN", "BLANK").map(n => sts.find(_.name == n).get)
+    val cfg = JobConfig(sourceDialect = "jdbc", sourceUrl = srcUrl,
+      targetUrl = tgtUrl, targetSchema = null, chunkSize = 100L,
+      workers = 2, validation = "checksum")
+    val loader = new SparkTableLoader(spark, cfg, tables)
+    val metas = tables.map(SchemaMapping.toTableMeta(GenericJdbcDialect,
+      _, Nil, TypeOptions()))
+    assert(metas.map(loader.load) == Seq(240L, 0L))
+
+    // the digest formula before the partition fold, computed inline
+    def aggDigest(url: String, table: String, cols: Seq[String]): String = {
+      val df: DataFrame = spark.read.format("jdbc").option("url", url)
+        .option("dbtable", table).load()
+      val canon = concat_ws("\u0001", cols.map(c =>
+        coalesce(col(c).cast("string"), lit("\u0000NULL"))): _*)
+      val h = conv(substring(md5(canon.cast("binary")), 1, 15), 16, 10)
+        .cast(DecimalType(38, 0))
+      val r = df.agg(count(lit(1)), sum(h)).collect().head
+      val d = Option(r.getDecimal(1)).map(_.toBigInteger)
+        .getOrElse(java.math.BigInteger.ZERO)
+      s"${r.getLong(0)}:$d"
+    }
+    val clock = new StageClock
+    spark.sparkContext.addSparkListener(clock)
+    try tables.zip(metas).foreach { case (st, meta) =>
+      val srcCols = st.columns.map(_.name)
+      val digests = Seq(
+        (() => loader.sourceDigest(meta).get) ->
+          aggDigest(srcUrl, "\"" + st.name + "\"", srcCols),
+        (() => loader.targetDigest(meta).get) ->
+          aggDigest(tgtUrl, "\"" + meta.name + "\"",
+            srcCols.map(_.toLowerCase)))
+      digests.foreach { case (digest, expected) =>
+        clock.quiesce(); clock.reset()
+        val got = digest()
+        clock.quiesce()
+        assert(got == expected, s"${meta.name}")
+        assert(clock.jobs == 1 && clock.shuffleBytes == 0L,
+          s"${meta.name}: a digest launched ${clock.jobs} jobs, " +
+            s"${clock.shuffleBytes} shuffle bytes")
+      }
+    } finally spark.sparkContext.removeSparkListener(clock)
+    val pin = loader.sourceDigest(metas.head).get
+    assert(pin.startsWith("240:") &&
+      BigInt(pin.split(':')(1)) > Long.MaxValue, pin)
+    assert(loader.sourceDigest(metas(1)).get == "0:0")
+    assert(loader.targetDigest(metas(1)).get == "0:0")
+  }
+
   test("resume on Derby: a failed chunk retries without duplicating " +
       "the chunks a prior run completed") {
     import graft.checkpoint.CheckpointManager
@@ -232,6 +322,8 @@ class JdbcIntegrationSpec extends AnyFunSuite {
     val loader1 = new SparkTableLoader(spark, cfg, Seq(evts), Some(cp1))
     val e = intercept[RuntimeException](loader1.load(meta))
     assert(e.getMessage.contains("failed migration"))
+    // the chunk's failure text keeps the exception class
+    assert(e.getMessage.contains("chunk 2: java.sql."), e.getMessage)
     cp1.flush() // what MigrationPipeline does when the load throws
     assert(cp1.completed("evts").size == 4)
     assert(!cp1.isDone("evts", 2L))

@@ -425,6 +425,48 @@ class PipelineSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(cpPath))
   }
 
+  test("a failing checkpoint flush is attached to the CREATE or load " +
+      "error it flushed for, and thrown alone only when nothing else failed") {
+    import graft.checkpoint.CheckpointManager
+    // the checkpoint's parent is a regular file, so every flush throws
+    val notADir = java.nio.file.Files.createTempFile("graft-pcp", ".file")
+    def broken() = Some(CheckpointManager.load(
+      notADir.resolve("graft_checkpoint.json").toString, "fp"))
+    def flushError(e: Throwable): Boolean =
+      e.getSuppressed.exists(_.isInstanceOf[java.io.IOException])
+
+    val failingCreate = new Recorder {
+      override def execute(sql: String): Unit =
+        if (sql.startsWith("CREATE TABLE")) sys.error("create failed")
+        else super.execute(sql)
+    }
+    val e1 = intercept[RuntimeException] {
+      new MigrationPipeline(JobConfig(unloggedTables = false),
+        failingCreate, NoopLoader, checkpoint = broken())
+        .migrate(Seq(users))
+    }
+    assert(e1.getMessage == "create failed" && flushError(e1), e1)
+
+    // data_only skips the schema phase and its flush, so the load's
+    // failure is the first thing to flush
+    val failingLoad = new TableLoader {
+      def load(t: TableMeta): Long = sys.error("copy failed")
+      def sourceCount(t: TableMeta): Long = 0L
+      def targetCount(t: TableMeta): Long = 0L
+    }
+    val e2 = intercept[RuntimeException] {
+      new MigrationPipeline(JobConfig(dataOnly = true), new Recorder,
+        failingLoad, checkpoint = broken()).migrate(Seq(users))
+    }
+    assert(e2.getMessage == "copy failed" && flushError(e2), e2)
+
+    // every CREATE succeeds: the schema phase's flush error is the error
+    intercept[java.io.IOException] {
+      new MigrationPipeline(JobConfig(), new Recorder, NoopLoader,
+        checkpoint = broken()).migrate(Seq(users))
+    }
+  }
+
   test("checkpoint rejects a changed job but accepts the legacy " +
       "unversioned table-list format") {
     import graft.checkpoint.CheckpointManager
